@@ -254,15 +254,76 @@ def test_reindex_and_ann_search(engine, spark, sf_dir):
     r = recall_at_k(approx, exact)
     assert r >= 0.2, f"LSH recall too low: {r}"
 
-    from vrod_spark.operators.ann import ann_search_bucketed
+    def search(candidate_factor):
+        arg = {"vector": qv, "k": 10, "candidate_factor": candidate_factor}
+        return engine.execute("SEARCHSIMILAR", collection="emb", arg=arg).df
 
     # larger candidate budget → higher recall (monotone knob)
-    wide = ann_search_bucketed(col, qv, 10, candidate_factor=40)
+    wide = search(40)
     assert recall_at_k(wide, exact) >= r
 
     # probing every bucket must reproduce the exact result (ANN → exact limit)
-    full = ann_search_bucketed(col, qv, 10, candidate_factor=10**6)
+    full = search(10**6)
     assert recall_at_k(full, exact) == 1.0
+
+
+def _small_lsh_collection(engine):
+    """Collection "emb": 200 seeded 8-dim Gaussian vectors, sign-LSH
+    REINDEXed; returns the vectors (row ``i`` has id ``i``)."""
+    import numpy as np
+
+    x = np.random.default_rng(5).normal(size=(200, 8))
+    engine.execute("CREATE", collection="emb")
+    engine.execute(
+        "INSERT",
+        collection="emb",
+        arg=[{"id": i, "embedding": [float(v) for v in row], "payload": "p"} for i, row in enumerate(x)],
+    )
+    assert engine.execute("REINDEX", collection="emb").info["indexed"]
+    return x
+
+
+def test_indexed_search_reads_the_snapshot_it_resolved(engine, monkeypatch):
+    """SEARCHSIMILAR resolves its snapshot once. A DELETE that commits
+    while the index search is choosing buckets drops the index and
+    rewrites the snapshot flat; the search must still answer, from the
+    bucketed version it resolved (the deleted row is its top hit)."""
+    import vrod_spark.operators.ann as ann
+
+    x = _small_lsh_collection(engine)
+    col = engine.db.collection("emb")
+    resolved = col.version
+    real = ann.candidate_buckets
+
+    def racing(*args, **kwargs):
+        engine.execute("DELETE", collection="emb", arg="id = 7")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(ann, "candidate_buckets", racing)
+    rows = engine.execute(
+        "SEARCHSIMILAR", collection="emb", arg={"vector": list(x[7]), "k": 10}
+    ).df.collect()
+    assert col.version == resolved + 1 and col.live_index() is None
+    assert len(rows) == 10
+    assert rows[0]["id"] == 7
+
+
+def test_indexed_search_builds_no_exact_read(engine, monkeypatch):
+    """The indexed path scans only the probed buckets: it never builds
+    the exact path's ``Collection.read`` (a listing of every bucket
+    directory)."""
+    from vrod_spark.catalog import Collection
+
+    x = _small_lsh_collection(engine)
+
+    def boom(*args, **kwargs):
+        raise AssertionError("indexed SEARCHSIMILAR called Collection.read")
+
+    monkeypatch.setattr(Collection, "read", boom)
+    rows = engine.execute(
+        "SEARCHSIMILAR", collection="emb", arg={"vector": list(x[3]), "k": 10}
+    ).df.collect()
+    assert len(rows) == 10 and rows[0]["id"] == 3
 
 
 def test_indexed_insert_is_odelta_and_keeps_index(engine, spark, sf_dir):
@@ -324,8 +385,6 @@ def test_missing_args(engine):
 
 
 def test_reindex_ivf_and_search(engine, spark, sf_dir):
-    from vrod_spark.operators.ivf import ivf_search
-
     engine.execute("CREATE", collection="emb")
     engine.execute("BULKINSERT", collection="emb", arg=records_df(spark, sf_dir))
     info = engine.execute("REINDEX", collection="emb", arg={"kind": "ivf", "n_centroids": 16}).info
@@ -341,10 +400,14 @@ def test_reindex_ivf_and_search(engine, spark, sf_dir):
     assert r >= 0.2, f"IVF recall too low: {r}"
     assert approx.first()["id"] == 11  # query vector's own row is found
 
+    def search(candidate_factor):
+        arg = {"vector": qv, "k": 10, "candidate_factor": candidate_factor}
+        return engine.execute("SEARCHSIMILAR", collection="emb", arg=arg).df
+
     # recall is monotone in candidate budget and exact in the limit
-    wide = ivf_search(col, qv, 10, candidate_factor=40)
+    wide = search(40)
     assert recall_at_k(wide, exact) >= r
-    full = ivf_search(col, qv, 10, candidate_factor=10**6)
+    full = search(10**6)
     assert recall_at_k(full, exact) == 1.0
 
     # mutations invalidate IVF like any index
@@ -1239,7 +1302,6 @@ def test_lsh_margin_probing_beats_hamming_at_equal_budget(spark, tmp_path, monke
     import numpy as np
 
     import vrod_spark.operators.ann as ann
-    from vrod_spark.operators.ann import ann_search_bucketed
 
     rng = np.random.default_rng(3)
     dim, ncl, per = 16, 10, 60
@@ -1261,11 +1323,15 @@ def test_lsh_margin_probing_beats_hamming_at_equal_budget(spark, tmp_path, monke
     eng.execute("REINDEX", collection="emb")
     col = eng.db.collection("emb")
 
+    def search(qv, candidate_factor):
+        arg = {"vector": qv, "k": 10, "candidate_factor": candidate_factor}
+        return eng.execute("SEARCHSIMILAR", collection="emb", arg=arg).df
+
     def mean_recall():
         recs = []
         for qid in (0, 111, 222, 333, 444, 555):
             qv = [float(v) for v in x[qid]]
-            approx = ann_search_bucketed(col, qv, 10, candidate_factor=3)
+            approx = search(qv, 3)
             exact = knn_exact(col.read(), qv, 10, vec_col="embedding", id_col="id")
             recs.append(recall_at_k(approx, exact, id_col="id"))
         return sum(recs) / len(recs)
@@ -1284,7 +1350,7 @@ def test_lsh_margin_probing_beats_hamming_at_equal_budget(spark, tmp_path, monke
 
     # exact in the limit: probing everything reproduces brute force
     qv = [float(v) for v in x[42]]
-    full = ann_search_bucketed(col, qv, 10, candidate_factor=10**6)
+    full = search(qv, 10**6)
     exact = knn_exact(col.read(), qv, 10, vec_col="embedding", id_col="id")
     assert recall_at_k(full, exact, id_col="id") == 1.0
 
@@ -1716,8 +1782,6 @@ def test_reindex_ivf_with_jl_projection(engine, spark, sf_dir):
     full-dim; recall matches the unprojected-index contract, is monotone
     in the candidate budget and exact in the limit; a delta INSERT
     assigns into the existing projected buckets (O(delta) append)."""
-    from vrod_spark.operators.ivf import ivf_search
-
     engine.execute("CREATE", collection="embp")
     engine.execute("BULKINSERT", collection="embp", arg=records_df(spark, sf_dir))
     info = engine.execute(
@@ -1737,7 +1801,11 @@ def test_reindex_ivf_with_jl_projection(engine, spark, sf_dir):
     ).df
     assert approx.first()["id"] == 11  # own row found, dist exact
     assert recall_at_k(approx, exact) >= 0.2
-    full = ivf_search(col, qv, 10, candidate_factor=10**6)
+    full = engine.execute(
+        "SEARCHSIMILAR",
+        collection="embp",
+        arg={"vector": qv, "k": 10, "candidate_factor": 10**6},
+    ).df
     assert recall_at_k(full, exact) == 1.0
 
     # O(delta) append: a near-copy of id 11 lands in 11's bucket and is

@@ -334,8 +334,9 @@ class Collection:
                 out.add(v)
         return out
 
-    def live_index(self, meta: dict | None = None) -> dict | None:
-        """The index dict consumers may TRUST, or None.
+    def live_index(self, meta: dict | None = None, version: int | None = None) -> dict | None:
+        """The index dict consumers may TRUST for snapshot ``version`` (the
+        current pointer when omitted), or None.
 
         ``meta['index']`` alone is not proof the index is live: REINDEX's
         commit tail writes the index meta BEFORE the _CURRENT pointer
@@ -352,6 +353,12 @@ class Collection:
         stale index meta is permanently inert — readers fall back to the
         exact paths until a REINDEX re-runs or TRUNCATEWAL clears it.
         Stamp-less index meta (pre-r14 collections) is trusted as live.
+
+        A caller that pins ``version`` must read the pointer BEFORE
+        ``meta``: every commit writes meta before it swaps the pointer, so
+        meta is then at least as new as ``version``. A stamp above
+        ``version`` means a REINDEX or rewrite landed after the pin, and
+        the pinned snapshot's layout may differ — not live for it.
         """
         idx = (meta if meta is not None else self.meta).get("index")
         if not idx:
@@ -359,14 +366,16 @@ class Collection:
         v = idx.get("version")
         if v is None:
             return idx
-        # Fast path: a stamp equal to the CURRENT pointer is committed by
+        # Fast path: a stamp equal to the pointer is committed by
         # definition (the pointer only ever names committed snapshots) —
         # skips the O(commits) WAL parse for the common just-reindexed
         # state; older stamps (appends since) pay one wal.jsonl read,
         # bounded by TRUNCATEWAL compaction.
-        if int(v) == self.version:
+        v = int(v)
+        pinned = self.version if version is None else version
+        if v == pinned:
             return idx
-        return idx if int(v) in self.committed_versions() else None
+        return idx if v < pinned and v in self.committed_versions() else None
 
     def read(self, version: int | None = None, *, spark: SparkSession | None = None) -> DataFrame:
         """Read a committed snapshot — the CURRENT one by default, or a
@@ -634,10 +643,11 @@ class Collection:
                         .parquet(staging)
                     )
                 else:
-                    # One task per known bucket when the histogram is
-                    # available (r17, the ann.py reindex rationale): AQE
-                    # otherwise coalesces the post-shuffle partitions and
-                    # a single task writes every partition file serially.
+                    # Roughly one task per known bucket (hash-partitioned)
+                    # when the histogram is available (the ann.py reindex
+                    # rationale): AQE otherwise coalesces the post-shuffle
+                    # partitions and a single task writes every partition
+                    # file serially.
                     n_buckets = len(idx.get("histogram") or {})
                     (
                         (

@@ -1005,7 +1005,8 @@ class Engine:
         `arg`: {"vector": [...], "k": 10, "where": optional prefilter} or
         "v1,v2,...;k=5". Exact path scores with codegen'd expressions and
         plans TakeOrderedAndProject; REINDEXed collections use the
-        LSH-bucketed fast path (operators.ann).
+        bucket-pruned path (sign-LSH/IVF, operators.ann) or the ADC path
+        (pq/ivfpq, operators.pq).
 
         ``{"within": r}`` switches to RANGE search (everything with
         distance ≤ r, operators.knn.range_search), with optional ``k`` as
@@ -1125,12 +1126,34 @@ class Engine:
             for knob in ("candidate_factor", "rescore_factor"):
                 if spec.get(knob) is not None:
                     tuning[knob] = int(spec[knob])
+        # Resolve the snapshot ONCE: pointer first, then meta. Every commit
+        # writes meta before it swaps the pointer, so an index that is
+        # live for ``version`` describes that snapshot's on-disk layout
+        # even if a commit lands mid-search; the index search then reads
+        # ``v<version>`` and no catalog state of its own.
+        version = col.version
         meta = col.meta
+        metric = meta.get("metric", "l2")
         declared = meta.get("dimension")
         if declared is not None and len(vector) != declared:
             raise DimensionMismatchError(
                 f"query vector dimension {len(vector)} != collection dimension {declared}"
             )
+        live_idx = col.live_index(meta, version) if within is None else None
+        if live_idx:
+            if live_idx.get("kind") in ("pq", "ivfpq"):
+                from vrod_spark.operators.pq import pq_collection_search as search
+
+                knob = "rescore_factor"
+            else:
+                from vrod_spark.operators.ann import ann_search_bucketed as search
+
+                knob = "candidate_factor"
+            opts = {knob: tuning[knob]} if knob in tuning else {}
+            result = search(
+                col, live_idx, version, vector, k, metric=metric, prefilter=where, **opts
+            )
+            return CommandResult("SEARCHSIMILAR", df=result)
         df = col.read()
         if where:
             df = df.filter(F.expr(where))
@@ -1143,29 +1166,10 @@ class Engine:
                 float(within),
                 vec_col="embedding",
                 id_col="id",
-                metric=meta.get("metric", "l2"),
+                metric=metric,
                 payload_cols=("payload",),
                 limit=int(spec["k"]) if isinstance(spec, dict) and "k" in spec else None,
             )
-            return CommandResult("SEARCHSIMILAR", df=result)
-        live_idx = col.live_index(meta)
-        if live_idx:
-            kind = live_idx.get("kind")
-            if kind == "ivf":
-                from vrod_spark.operators.ivf import ivf_search
-
-                opts = {"candidate_factor": tuning["candidate_factor"]} if "candidate_factor" in tuning else {}
-                result = ivf_search(col, vector, k, prefilter=where, **opts)
-            elif kind in ("pq", "ivfpq"):
-                from vrod_spark.operators.pq import pq_collection_search
-
-                opts = {"rescore_factor": tuning["rescore_factor"]} if "rescore_factor" in tuning else {}
-                result = pq_collection_search(col, vector, k, prefilter=where, **opts)
-            else:
-                from vrod_spark.operators.ann import ann_search_bucketed
-
-                opts = {"candidate_factor": tuning["candidate_factor"]} if "candidate_factor" in tuning else {}
-                result = ann_search_bucketed(col, vector, k, prefilter=where, **opts)
             return CommandResult("SEARCHSIMILAR", df=result)
         result = knn_exact(
             df,
@@ -1173,7 +1177,7 @@ class Engine:
             k,
             vec_col="embedding",
             id_col="id",
-            metric=meta.get("metric", "l2"),
+            metric=metric,
             payload_cols=("payload",),
         )
         return CommandResult("SEARCHSIMILAR", df=result)

@@ -111,16 +111,15 @@ def reindex_collection(collection, *, n_planes: int = DEFAULT_PLANES, seed: int 
     try:
         # Cluster rows physically by bucket; partitionBy gives one
         # directory per bucket → partition pruning serves bucket scans.
-        # Explicit numPartitions = 2^n_planes (one task per bucket, r17):
-        # a keyless repartition("bucket") lets AQE coalesce the tiny
-        # post-shuffle partitions into one or two tasks, which then write
-        # all 2^n_planes partition files SEQUENTIALLY — measured 4.4-5.2 s
-        # vs 1.4-1.8 s for the pinned count at sf0.1/local[32], identical
-        # 256 files (guide §2.6 idle capacity). At scale one task per
-        # bucket is the natural write shape for a bucket-partitioned
-        # snapshot; installations with huge per-bucket volumes raise
-        # n_planes (scan cost is O(N / 2^planes), so buckets stay
-        # bounded).
+        # Explicit numPartitions = 2^n_planes, roughly one task per
+        # bucket (hash-partitioned: ~37% of tasks get no bucket, some get
+        # two or three): a keyless repartition("bucket") lets AQE
+        # coalesce the tiny post-shuffle partitions into one or two
+        # tasks, which then write all 2^n_planes partition files
+        # SEQUENTIALLY — measured 4.4-5.2 s vs 1.4-1.8 s for the pinned
+        # count at sf0.1/local[32], identical 256 files. Installations
+        # with huge per-bucket volumes raise n_planes (scan cost is
+        # O(N / 2^planes), so buckets stay bounded).
         (
             df.repartition(1 << n_planes, "bucket")
             .sortWithinPartitions("bucket", "id")
@@ -210,18 +209,20 @@ def candidate_buckets(
 
 
 def ann_search_bucketed(
-    collection, vector: list[float], k: int, *, prefilter: str | None = None,
-    candidate_factor: int = 8,
+    collection, index: dict, version: int, vector: list[float], k: int, *,
+    metric: str, prefilter: str | None = None, candidate_factor: int = 8,
 ) -> DataFrame:
-    """LSH fast path: prune to candidate buckets, exact-score, top-k."""
-    index_meta = collection.live_index()
-    if index_meta is None:
-        raise RuntimeError(
-            f"{collection.name}: no live index (missing, or its commit "
-            "never became visible — re-run REINDEX)"
-        )
-    buckets = candidate_buckets(index_meta, vector, k, candidate_factor)
-    df = collection.db.spark.read.parquet(collection.version_dir())
+    """Bucket-pruned search over snapshot ``v<version>``, laid out by the
+    live ``index`` (sign_lsh or ivf) that the caller resolved for that
+    version: prune to candidate buckets, exact-score, top-k. Reads no
+    catalog state itself, so a commit landing mid-search cannot pair
+    this index with a differently laid-out snapshot."""
+    if index.get("kind") == "ivf":
+        from vrod_spark.operators.ivf import ivf_candidate_buckets as pick
+    else:
+        pick = candidate_buckets
+    buckets = pick(index, vector, k, candidate_factor)
+    df = collection.db.spark.read.parquet(collection.version_dir(version))
     df = df.filter(F.col("bucket").isin(buckets))  # → partition pruning
     if prefilter:
         df = df.filter(F.expr(prefilter))
@@ -231,7 +232,7 @@ def ann_search_bucketed(
         k,
         vec_col="embedding",
         id_col="id",
-        metric=collection.meta.get("metric", "l2"),
+        metric=metric,
         payload_cols=("payload",),
     )
 

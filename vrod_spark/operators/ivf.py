@@ -14,7 +14,7 @@ Build (offline, one distributed pass + tiny driver-side k-means):
 Search: rank centroids by distance to the query driver-side, take
 buckets until the histogram covers ``candidate_factor × k`` rows
 (monotone recall knob, exact in the limit), then partition-pruned
-exact scoring.
+exact scoring (``ann.ann_search_bucketed``, shared with sign-LSH).
 
 IVF vs sign-LSH: IVF adapts to the data distribution (centroids land
 where vectors are), so on clustered corpora it prunes far better; LSH is
@@ -25,10 +25,7 @@ REINDEX picks via ``kind``.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from vrod_spark.operators.knn import knn_exact
 
 SEED = 42
 
@@ -105,8 +102,8 @@ def reindex_ivf(
 
     ``project_dim`` composes a JL random projection into the coarse
     quantizer: train + assign + probe in projected space (cheap), rescore
-    candidates with EXACT full-dimension distances in ``ivf_search``
-    (unchanged) — the two-stage recipe for wide embeddings (the
+    candidates with EXACT full-dimension distances in
+    ``ann.ann_search_bucketed`` (unchanged) — the two-stage recipe for wide embeddings (the
     reference's 384-dim fastembed output). Only (dim, seed) persist in
     the index meta; the matrix regenerates deterministically."""
     meta = collection.meta
@@ -155,9 +152,10 @@ def reindex_ivf(
     staging = os.path.join(collection.path, f".staging-{uuid.uuid4().hex}")
     try:
         (
-            # One task per centroid bucket (r17, the ann.py rationale):
-            # AQE otherwise coalesces the tiny post-shuffle partitions
-            # and one task writes every partition file sequentially.
+            # Roughly one task per centroid bucket (hash-partitioned; the
+            # ann.py rationale): AQE otherwise coalesces the tiny post-
+            # shuffle partitions and one task writes every partition file
+            # sequentially.
             bucketed.repartition(len(centroids), "bucket")
             .sortWithinPartitions("bucket", "id")
             .write.partitionBy("bucket")
@@ -220,30 +218,3 @@ def ivf_candidate_buckets(
         if have >= want:
             break
     return chosen or [int(order[0])]
-
-
-def ivf_search(
-    collection, vector: list[float], k: int, *, prefilter: str | None = None,
-    candidate_factor: int = 8,
-) -> DataFrame:
-    """Probe nearest centroids (partition-pruned scan) then exact-score."""
-    index_meta = collection.live_index()
-    if index_meta is None:
-        raise RuntimeError(
-            f"{collection.name}: no live index (missing, or its commit "
-            "never became visible — re-run REINDEX)"
-        )
-    buckets = ivf_candidate_buckets(index_meta, vector, k, candidate_factor)
-    df = collection.db.spark.read.parquet(collection.version_dir())
-    df = df.filter(F.col("bucket").isin(buckets))
-    if prefilter:
-        df = df.filter(F.expr(prefilter))
-    return knn_exact(
-        df,
-        vector,
-        k,
-        vec_col="embedding",
-        id_col="id",
-        metric=collection.meta.get("metric", "l2"),
-        payload_cols=("payload",),
-    )

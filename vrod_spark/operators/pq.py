@@ -686,7 +686,8 @@ def reindex_ivfpq(
     staging = os.path.join(collection.path, f".staging-{uuid.uuid4().hex}")
     try:
         (
-            # One task per centroid bucket (r17, the ann.py rationale).
+            # Roughly one task per centroid bucket (hash-partitioned; the
+            # ann.py rationale).
             enc.repartition(len(centroids), "bucket")
             .sortWithinPartitions("bucket", "id")
             .write.partitionBy("bucket")
@@ -729,13 +730,18 @@ def reindex_ivfpq(
 
 def pq_collection_search(
     collection,
+    index: dict,
+    version: int,
     vector: list[float],
     k: int,
     *,
+    metric: str,
     prefilter: str | None = None,
     rescore_factor: int = 4,
 ) -> DataFrame:
-    """SEARCHSIMILAR over a pq/ivfpq-REINDEXed collection:
+    """SEARCHSIMILAR over snapshot ``v<version>`` of a pq/ivfpq-REINDEXed
+    collection, with the live ``index`` the caller resolved for that
+    version (no catalog state is re-read here):
 
     1. ivfpq only — occupancy-aware bucket probing (reuses
        ``ivf_candidate_buckets``: skips empty buckets, expands until the
@@ -761,37 +767,31 @@ def pq_collection_search(
 
     from vrod_spark.operators.knn import knn_exact
 
-    idx = collection.live_index()
-    if idx is None:
-        raise RuntimeError(
-            f"{collection.name}: no live index (missing, or its commit "
-            "never became visible — re-run REINDEX)"
-        )
-    cb = np.asarray(idx["codebooks"], dtype=np.float64)
+    cb = np.asarray(index["codebooks"], dtype=np.float64)
     rotation = (
-        np.asarray(idx["rotation"], dtype=np.float64) if idx.get("rotation") else None
+        np.asarray(index["rotation"], dtype=np.float64) if index.get("rotation") else None
     )
     spark = collection.db.spark
-    raw = spark.read.parquet(collection.version_dir())
+    raw = spark.read.parquet(collection.version_dir(version))
     cand = raw
-    if idx["kind"] == "ivfpq":
+    if index["kind"] == "ivfpq":
         from vrod_spark.operators.ivf import ivf_candidate_buckets
 
         buckets = ivf_candidate_buckets(
-            idx, vector, k, candidate_factor=max(rescore_factor, 4)
+            index, vector, k, candidate_factor=max(rescore_factor, 4)
         )
         cand = cand.filter(F.col("bucket").isin(buckets))
     if prefilter:
         cand = cand.filter(F.expr(prefilter))
     n_adc = max(k * rescore_factor, k)
-    if idx.get("residual"):
+    if index.get("residual"):
         codes = cand.select(
             F.col("id"), F.col("pq_code").alias("code"), F.col("bucket")
         )
         adc = pq_search_residual(
             codes,
             cb,
-            np.asarray(idx["centroids"], dtype=np.float64),
+            np.asarray(index["centroids"], dtype=np.float64),
             vector,
             n_adc,
             id_col="id",
@@ -808,6 +808,6 @@ def pq_collection_search(
         k,
         vec_col="embedding",
         id_col="id",
-        metric=collection.meta.get("metric", "l2"),
+        metric=metric,
         payload_cols=("payload",),
     )
